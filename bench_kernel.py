@@ -87,7 +87,9 @@ def run_shard_acc(paths: list[str]):
     rwv = _G["rw"]
     ml = _G["ml"]
     idx_t = _G["idx_t"]
-    sub = _G["sub_override"] or min(1 << 21, max(1 << 16, 4 * ml))
+    sub = _G["sub_override"]
+    if sub is None:
+        sub = min(1 << 21, max(1 << 16, 4 * ml))
     wbuf = np.empty(sub, dtype=rwv.dtype)
     sbuf = np.empty(sub, dtype=idx_t)
     d16 = np.empty(sub, dtype=np.uint16)
@@ -136,14 +138,21 @@ def run_shard_acc(paths: list[str]):
     return edges, time.time() - t0, a
 
 
-def main() -> None:
+def _positive_int(text: str) -> int:
+    v = int(text)
+    if v < 1:
+        raise argparse.ArgumentTypeError(f"must be >= 1, got {v}")
+    return v
+
+
+def main(argv: list[str] | None = None) -> None:
     ap = argparse.ArgumentParser()
     ap.add_argument("--pack", default="/tmp/prbench_pack_100000_1000000000_s42_c32")
     ap.add_argument("--procs", default="32,8,4,1")
     ap.add_argument("--trials", type=int, default=3)
-    ap.add_argument("--sub-chunk", type=int, default=None,
+    ap.add_argument("--sub-chunk", type=_positive_int, default=None,
                     help="override the L2-resident sub-chunk length (edges)")
-    args = ap.parse_args()
+    args = ap.parse_args(argv)
 
     with open(os.path.join(args.pack, "manifest.json")) as fh:
         man = json.load(fh)

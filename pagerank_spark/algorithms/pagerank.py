@@ -64,6 +64,7 @@ Three physical strategies:
 
 from __future__ import annotations
 
+import json
 import time
 import uuid
 from dataclasses import dataclass, field
@@ -1115,10 +1116,11 @@ class PageRank:
             wall = time.time() - t0
             iter_secs.append(wall)
             if self.catalog is not None and it % self.checkpoint_interval == 0:
-                self._checkpoint_vector(spark, run_id, it, pi)
+                self._checkpoint_vector(run_id, it, pi)
             if self.lineage is not None:
+                # one map-only stage per iteration: nothing is shuffled
                 self.lineage.log_iteration(
-                    run_id, it, rows_shuffled=m, residual_l1=delta, wall_time_s=wall,
+                    run_id, it, rows_shuffled=0, residual_l1=delta, wall_time_s=wall,
                     extra={"dangling_mass": dmass, "mode": "csr"},
                 )
             if delta < eps:
@@ -1131,7 +1133,7 @@ class PageRank:
 
             shutil.rmtree(scratch, ignore_errors=True)
         tbl = pa.table({"id": np.arange(n, dtype=np.int64), "rank": pi})
-        ranks = spark.createDataFrame(tbl.to_pandas())
+        ranks = spark.createDataFrame(tbl)
         tput = m / (sum(iter_secs) / len(iter_secs)) if iter_secs else 0.0
         return PageRankResult(ranks, it, deltas, run_id, tput, iter_secs)
 
@@ -1186,6 +1188,16 @@ class PageRank:
                 "(delete the checkpoint table) to use dataframe/broadcast "
                 "mode."
             )
+        # the manifest's schema, not the DataFrame's columns: reading the
+        # parquet schema is a Spark job, and this check must come before
+        # any O(V) work
+        cols = [f["name"] for f in json.loads(meta.schema_json)["fields"]]
+        if "non_dangling" not in cols:
+            raise ValueError(
+                f"checkpoint '{table}' is missing the non_dangling column "
+                "expected by dataframe/broadcast state — it was written by "
+                "a vector-mode run; resume with mode='csr' or restart."
+            )
         # statically planned checkpoint keeps the hash(id) partitioning so
         # the resumed iteration chain stays 1-shuffle (see _df_iteration)
         with _util.static_plan(spark):
@@ -1194,18 +1206,13 @@ class PageRank:
                 .repartition(shuffle_p, "id")
                 .localCheckpoint(eager=True)
             )
-        if "non_dangling" not in df.columns:
-            raise ValueError(
-                f"checkpoint '{table}' is missing the non_dangling column "
-                "expected by dataframe/broadcast state — it was written by "
-                "a vector-mode run; resume with mode='csr' or restart."
-            )
         return df, int(s["iteration"]), float(s["dmass"]), float(s["total"])
 
-    def _checkpoint_vector(self, spark: SparkSession, run_id: str, it: int, pi: np.ndarray):
+    def _checkpoint_vector(self, run_id: str, it: int, pi: np.ndarray):
+        # the vector is already on the driver: the catalog writes the Arrow
+        # table itself, with no Spark job
         tbl = pa.table({"id": np.arange(pi.shape[0], dtype=np.int64), "rank": pi})
-        df = spark.createDataFrame(tbl.to_pandas())
-        self.catalog.write(df, f"pagerank_ckpt_{run_id}", summary={"iteration": it})
+        self.catalog.write(tbl, f"pagerank_ckpt_{run_id}", summary={"iteration": it})
 
     def _try_resume_vector(self, spark: SparkSession, run_id: str, n: int):
         table = f"pagerank_ckpt_{run_id}"

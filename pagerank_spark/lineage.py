@@ -4,16 +4,29 @@ Schema (FIXTURES.md §5): one row per (run, iteration[, partition]) with rows
 shuffled, L1 residual, wall time, and the checkpoint snapshot id, so any run
 can be audited and resumed. Partition-level rows are optional (an extra small
 job per iteration) — aggregate rows (partition_id = -1) are always written.
+Rows are built on the driver as a ``pyarrow.Table`` and committed by the
+catalog's driver-side writer, so logging an iteration starts no Spark job.
 """
 
 from __future__ import annotations
 
 import json
 
+import pyarrow as pa
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 
 LINEAGE_TABLE = "lineage"
+LINEAGE_SCHEMA = pa.schema([
+    ("run_id", pa.string()),
+    ("iteration", pa.int32()),
+    ("partition_id", pa.int32()),
+    ("rows_shuffled", pa.int64()),
+    ("residual_l1", pa.float64()),
+    ("wall_time_s", pa.float64()),
+    ("snapshot", pa.string()),
+    ("extra", pa.string()),
+])
 
 
 class LineageWriter:
@@ -58,12 +71,9 @@ class LineageWriter:
                 (run_id, iteration, pid, cnt, float(residual_l1),
                  float(wall_time_s), snapshot, "{}")
             )
-        df = self.spark.createDataFrame(
-            rows,
-            "run_id string, iteration int, partition_id int, rows_shuffled long, "
-            "residual_l1 double, wall_time_s double, snapshot string, extra string",
-        )
-        self.catalog.write(df, LINEAGE_TABLE, mode="append")
+        cols = dict(zip(LINEAGE_SCHEMA.names, map(list, zip(*rows))))
+        tbl = pa.Table.from_pydict(cols, schema=LINEAGE_SCHEMA)
+        self.catalog.write(tbl, LINEAGE_TABLE, mode="append")
 
     def read(self, run_id: str | None = None) -> DataFrame:
         df = self.catalog.read(self.spark, LINEAGE_TABLE)

@@ -92,3 +92,25 @@ def test_kernel_checksum_shard_api(packed_graph):
     edges, wall, checksum = bench_kernel._run_shard(paths)
     assert edges == int(man["m"])
     assert wall >= 0.0 and np.isfinite(checksum) and checksum > 0.0
+
+
+def test_sub_chunk_override_is_honoured(packed_graph):
+    """An explicit sub-chunk length is used as given (not dropped for being
+    small) and gives the same accumulators as the default length."""
+    _, _, scratch = packed_graph
+    with open(os.path.join(scratch, "manifest.json")) as fh:
+        man = json.load(fh)
+    paths = [p for _, p in man["files"]]
+    bench_kernel._init(scratch, None)
+    _, _, want = bench_kernel.run_shard_acc(paths)
+    bench_kernel._init(scratch, 7)
+    _, _, got = bench_kernel.run_shard_acc(paths)
+    np.testing.assert_allclose(got, want, rtol=1e-12, atol=1e-15)
+
+
+@pytest.mark.parametrize("value", ["0", "-3"])
+def test_sub_chunk_below_one_rejected(value, capsys):
+    with pytest.raises(SystemExit) as exc:
+        bench_kernel.main(["--pack", "unused", "--sub-chunk", value])
+    assert exc.value.code == 2
+    assert "--sub-chunk: must be >= 1" in capsys.readouterr().err

@@ -1,15 +1,19 @@
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 
 import numpy as np
+import pyarrow as pa
 import pytest
 
 from pagerank_spark.algorithms.pagerank import PageRank
-from pagerank_spark.lineage import LineageWriter
+from pagerank_spark.lineage import LINEAGE_SCHEMA, LineageWriter
+from pagerank_spark.oracle import pagerank_numpy
 from pagerank_spark.sources.graphfile import edges_from_numpy
 from pagerank_spark.tables import Catalog
+from pagerank_spark.tables.catalog import CommitConflictError
 
 
 @pytest.fixture
@@ -299,3 +303,161 @@ def test_concurrent_write_threads_one_wins(spark, cat):
     assert w in wins
     got = sorted(r["id"] for r in cat.read(spark, "t").collect())
     assert got == list(range(w * 100, w * 100 + 5))
+
+
+# -- driver-side (pyarrow.Table) commits -------------------------------------
+
+LINEAGE_DDL = (
+    "run_id string, iteration int, partition_id int, rows_shuffled long, "
+    "residual_l1 double, wall_time_s double, snapshot string, extra string"
+)
+
+
+@contextlib.contextmanager
+def job_group(spark, name):
+    """Run the body in Spark job group ``name``; yields a function returning
+    the ids of the jobs started in the group so far."""
+    sc = spark.sparkContext
+    sc.setJobGroup(name, name)
+    try:
+        yield lambda: list(sc.statusTracker().getJobIdsForGroup(name))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+
+
+def zipf_graph(n=400, m=3000, seed=5):
+    """Small skewed graph with dangling sources (a third of the ids never
+    appear as a source) and no self-loops."""
+    rng = np.random.default_rng(seed)
+    src = rng.integers(0, 2 * n // 3, size=m)
+    dst = (rng.zipf(1.5, size=m) - 1) % n
+    arr = np.stack([src, dst], axis=1).astype(np.int64)
+    return arr[arr[:, 0] != arr[:, 1]], n
+
+
+def test_arrow_write_roundtrip_same_schema_as_dataframe_path(spark, cat):
+    tbl = pa.table({
+        "id": np.arange(50, dtype=np.int64),
+        "rank": np.linspace(0.0, 1.0, 50),
+        "name": [f"v{i}" for i in range(50)],
+    })
+    meta = cat.write(tbl, "arrow", summary={"iteration": 4})
+    assert meta.summary["iteration"] == 4 and meta.partition_spec == {}
+    data_dir = os.path.join(cat.warehouse, "arrow", meta.data_dir)
+    assert os.listdir(data_dir) == ["part-00000.parquet"]
+    back = cat.read(spark, "arrow").toArrow().sort_by("id")
+    assert back.equals(tbl)
+    assert meta.schema_json == cat.write(spark.createDataFrame(tbl), "df").schema_json
+
+    rows = [("r", 1, -1, 7, 0.5, 0.25, None, "{}")]
+    lin = pa.Table.from_pylist(
+        [dict(zip(LINEAGE_SCHEMA.names, r)) for r in rows], schema=LINEAGE_SCHEMA)
+    assert (cat.write(lin, "lin_arrow").schema_json
+            == cat.write(spark.createDataFrame(rows, LINEAGE_DDL), "lin_df").schema_json)
+
+
+def test_arrow_write_and_log_iteration_start_no_spark_job(spark, cat):
+    tbl = pa.table({"id": np.arange(10, dtype=np.int64), "rank": np.ones(10)})
+    lin = LineageWriter(spark, cat)
+    with job_group(spark, "arrow-commit-no-job") as jobs:
+        cat.write(tbl, "t")
+        cat.write(tbl, "t", mode="append")
+        lin.log_iteration("r", 1, rows_shuffled=0, residual_l1=0.1, wall_time_s=0.2)
+        lin.log_iteration("r", 2, rows_shuffled=0, residual_l1=0.01, wall_time_s=0.2,
+                          snapshot="2", partition_counts=[(0, 3), (1, 4)])
+        assert jobs() == []
+        spark.range(3).count()  # the group does see a job that runs
+        assert len(jobs()) >= 1
+    assert cat.read(spark, "t").count() == 20
+
+
+def test_lineage_spark_snapshot_then_arrow_appends_read_as_one(spark, cat):
+    lin = LineageWriter(spark, cat)
+    first = spark.createDataFrame(
+        [("old", 1, -1, 100, 0.5, 1.5, "0", "{}")], LINEAGE_DDL)
+    cat.write(first, "lineage")  # written by Spark, as older engines did
+    lin.log_iteration("new", 1, rows_shuffled=0, residual_l1=0.25, wall_time_s=0.5,
+                      snapshot="3", extra={"mode": "csr"})
+    lin.log_iteration("new", 2, rows_shuffled=0, residual_l1=0.125, wall_time_s=0.5,
+                      partition_counts=[(0, 9)])
+    df = lin.read()
+    assert df.schema == spark.createDataFrame([], LINEAGE_DDL).schema
+    got = sorted(tuple(r) for r in df.collect())
+    assert got == [
+        ("new", 1, -1, 0, 0.25, 0.5, "3", '{"mode": "csr"}'),
+        ("new", 2, -1, 0, 0.125, 0.5, None, "{}"),
+        ("new", 2, 0, 9, 0.125, 0.5, None, "{}"),
+        ("old", 1, -1, 100, 0.5, 1.5, "0", "{}"),
+    ]
+    assert lin.read("old").count() == 1
+    assert len(json.loads(cat.current_meta("lineage").summary["data_dirs"])) == 3
+
+
+@pytest.mark.parametrize("kw", [{"bucket_by": (4, "id")}, {"partition_by": ["id"]}])
+def test_arrow_write_rejects_layout_options(cat, kw):
+    tbl = pa.table({"id": np.arange(4, dtype=np.int64)})
+    with pytest.raises(ValueError, match="pyarrow.Table"):
+        cat.write(tbl, "t", **kw)
+    assert not cat.exists("t")
+
+
+def test_csr_resume_from_arrow_checkpoint_matches_oracle(spark, cat):
+    arr, n = zipf_graph()
+    want, want_iters, _ = pagerank_numpy(arr, n)
+    edges = edges_from_numpy(spark, arr)
+    first = PageRank(max_iter=3, mode="csr", catalog=cat).run(edges, n, run_id="cres")
+    assert first.iterations == 3 < want_iters
+    meta = cat.current_meta("pagerank_ckpt_cres")
+    assert meta.summary["iteration"] == 3
+    assert os.listdir(os.path.join(cat.warehouse, "pagerank_ckpt_cres", meta.data_dir)) == [
+        "part-00000.parquet"]
+    res = PageRank(mode="csr", catalog=cat).run(edges, n, run_id="cres", resume=True)
+    assert res.iterations == want_iters
+    got = res.ranks.toArrow().sort_by("id").column("rank").to_numpy()
+    np.testing.assert_allclose(got, want, atol=1e-6)
+
+
+def test_lineage_rows_shuffled_csr_zero_dataframe_edge_count(spark, cat):
+    arr, n = zipf_graph(seed=11)
+    edges = edges_from_numpy(spark, arr)
+    lin = LineageWriter(spark, cat)
+    for mode in ("csr", "dataframe"):
+        PageRank(mode=mode, max_iter=4, lineage=lin).run(edges, n, run_id=mode)
+    rows = {mode: lin.read(mode).collect() for mode in ("csr", "dataframe")}
+    assert [r["rows_shuffled"] for r in rows["csr"]] == [0] * 4
+    assert [r["rows_shuffled"] for r in rows["dataframe"]] == [arr.shape[0]] * 4
+    assert all(json.loads(r["extra"])["mode"] == "csr" for r in rows["csr"])
+
+
+def test_resume_rejects_missing_non_dangling_before_any_spark_job(spark, cat):
+    """A checkpoint whose summary looks like dataframe state but whose data
+    lacks non_dangling fails before the O(V) repartition + localCheckpoint."""
+    n = 20
+    cat.write(
+        pa.table({"id": np.arange(n, dtype=np.int64), "rank": np.full(n, 1.0 / n)}),
+        "pagerank_ckpt_nd",
+        summary={"iteration": 2, "dmass": 0.1, "total": 1.0},
+    )
+    with job_group(spark, "resume-non-dangling") as jobs:
+        with pytest.raises(ValueError, match="non_dangling"):
+            PageRank(mode="dataframe", catalog=cat)._try_resume(spark, "nd", 8)
+        assert jobs() == []
+
+
+def test_commit_conflict_message_names_orphan_remedy(cat):
+    tbl = pa.table({"id": np.arange(3, dtype=np.int64)})
+    cat.write(tbl, "t")
+    # an orphaned claim: v1.json exists, its writer died before the flip
+    with open(os.path.join(cat._meta_dir("t"), "v1.json"), "w") as f:
+        json.dump({"snapshot_id": 1, "parent_id": 0, "schema_json": "{}",
+                   "data_dir": "data/snap-1-dead", "timestamp_ms": 0}, f)
+    with pytest.raises(CommitConflictError) as exc:
+        cat.write(tbl, "t")
+    msg = str(exc.value)
+    assert "snapshot 1" in msg and "orphan" in msg
+    assert "expire_snapshots('t')" in msg
+    assert f"vacuum --warehouse-dir {cat.warehouse}" in msg
+    # the remedy works: past the TTL the orphan goes and the retry commits
+    cat.expire_snapshots("t", orphan_ttl_s=0)
+    assert cat.write(tbl, "t").snapshot_id == 1
